@@ -139,10 +139,13 @@ def _index_smaller_than(index_dir: str, threshold: int) -> int | None:
     index is big). Tombstoned ids still count toward size — the switch
     mirrors the reference's segment-size rule (KNNSettings.java:70),
     which consults doc counts, not live docs; the exact pass still
-    masks tombstones. Memoized per cells-dir signature."""
+    masks tombstones. Memoized per cells-dir signature, taken after an
+    interrupted compaction swap is rolled forward/back — else the count
+    (and its memo) would miss a cell parked as ``.trash``/``.compact``."""
     if threshold <= 0:
         return None
     cells_dir = os.path.join(index_dir, "cells")
+    _recover_cell_swaps(cells_dir)
     sig = _cells_dir_sig(cells_dir)
     if sig is None:
         return None
@@ -951,6 +954,40 @@ def _check_format(index_dir: str) -> None:
         )
 
 
+def _list_matrix(col) -> np.ndarray:
+    """(n, d) float64 matrix of an Arrow list<double> column: the flat
+    child buffer reshaped, never a Python list per row (through
+    ``to_pylist`` a query over 8 cold 128-d cells took ~150 ms, ~20 ms
+    this way). Ragged rows raise, as np.array did."""
+    arr = col.combine_chunks()
+    n = len(arr)
+    lens = np.diff(np.asarray(arr.offsets))
+    d = int(lens[0]) if n else 0
+    if (lens != d).any():
+        raise ValueError("vector column has rows of different lengths")
+    flat = arr.flatten().to_numpy(zero_copy_only=False)
+    return np.asarray(flat, dtype=np.float64).reshape(n, d)
+
+
+def _binary_matrix(col, dtype) -> np.ndarray:
+    """(n, width) ``dtype`` view of a fixed-width Arrow binary column —
+    the data buffer itself, not one bytes object per row."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks()
+    n = len(arr)
+    if n == 0:
+        return np.empty((0, 0), dtype=dtype)
+    _, offs_buf, data_buf = arr.buffers()
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offs = np.frombuffer(offs_buf, dtype=otype)[arr.offset:arr.offset + n + 1]
+    lens = np.diff(offs)
+    if (lens != lens[0]).any():
+        raise ValueError("code column has rows of different lengths")
+    data = np.frombuffer(data_buf, dtype=np.uint8)[offs[0]:offs[-1]]
+    return data.view(dtype).reshape(n, -1)
+
+
 def _load_centroids(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
     import pyarrow.parquet as papq
 
@@ -967,8 +1004,8 @@ def _load_centroids(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
         return hit[1], hit[2]
     _check_format(index_dir)  # once per (re)parse, never per query
     cent = papq.read_table(d)
-    cells = np.asarray(cent["cell"].to_pylist(), dtype=np.int64)
-    C = np.array(cent["c"].to_pylist(), dtype=np.float64)
+    cells = np.asarray(cent["cell"].to_numpy(), dtype=np.int64)
+    C = _list_matrix(cent["c"])
     _CENTROID_CACHE.put(
         index_dir, (sig, cells, C), C.nbytes + cells.nbytes
     )
@@ -1048,8 +1085,8 @@ def _load_coarse(index_dir: str) -> tuple[np.ndarray, np.ndarray]:
         return hit[1], hit[2]
     _check_format(index_dir)  # once per (re)parse, never per query
     t = papq.read_table(p)
-    groups = np.asarray(t["group"].to_pylist(), dtype=np.int64)
-    G = np.array(t["g"].to_pylist(), dtype=np.float64)
+    groups = np.asarray(t["group"].to_numpy(), dtype=np.int64)
+    G = _list_matrix(t["g"])
     _COARSE_CACHE.put(index_dir, (sig, groups, G), G.nbytes + groups.nbytes)
     return groups, G
 
@@ -1071,8 +1108,8 @@ def _load_group_centroids(
     if hit is not None and hit[0] == sig:
         return hit[1], hit[2]
     t = papq.read_table(p)
-    cells = np.asarray(t["cell"].to_pylist(), dtype=np.int64)
-    C = np.array(t["c"].to_pylist(), dtype=np.float64)
+    cells = np.asarray(t["cell"].to_numpy(), dtype=np.int64)
+    C = _list_matrix(t["c"])
     _GROUP_CENTROID_CACHE.put(key, (sig, cells, C), C.nbytes + cells.nbytes)
     return cells, C
 
@@ -1869,6 +1906,155 @@ def _np_exact_batch(
     raise ValueError(f"unknown space {space!r}; supported: {SPACES}")
 
 
+def _tie_safe_top(a: np.ndarray, n: int) -> np.ndarray:
+    """Positions of every entry scoring at least the ``n``-th best of
+    ``a``. A per-partition cut must keep the WHOLE tie at its boundary:
+    an argpartition cut keeps an arbitrary part of it, and the later
+    global (score desc, vec_id asc) ranking then picks among survivors
+    instead of the lowest ids."""
+    if len(a) <= n:
+        return np.arange(len(a))
+    kth = np.partition(a, len(a) - n)[len(a) - n]
+    return np.flatnonzero(a >= kth)
+
+
+def _first_pass(cols: dict, idxs: list, Q: np.ndarray, qn: np.ndarray,
+                T: np.ndarray | None, space: str, budget: int):
+    """Quantized first pass over ONE cell group for the queries ``idxs``
+    that probed it — the arithmetic both batch executors share. PQ
+    (``T`` = per-query ADC tables): one flat gather for all of them;
+    SQ: one int8->f64 matmul. Then per query the space's proxy and the
+    tie-safe budget cut. ``cols`` holds ``norm`` and ``code`` or
+    ``sq_code``/``sq_scale``. Yields (query index, row positions,
+    proxy scores)."""
+    if T is not None:
+        Cb = cols["code"]
+        m, ncodes = T.shape[1], T.shape[2]
+        flat_idx = (np.arange(m) * ncodes + Cb).ravel()
+        lut = T[idxs].reshape(len(idxs), m * ncodes)
+        dots = lut[:, flat_idx].reshape(len(idxs), len(Cb), m).sum(axis=2)
+    else:
+        dots = (
+            (cols["sq_code"].astype(np.float64) @ Q[idxs].T)
+            * cols["sq_scale"][:, None]
+        ).T  # (nq_c, b)
+    for j, qi in enumerate(idxs):
+        a = _proxy_from_dots(dots[j], cols["norm"], qn[qi], space)
+        pos = _tie_safe_top(a, budget)
+        yield qi, pos, a[pos]
+
+
+def _candidate_csr(vids: np.ndarray, qpos: np.ndarray) -> tuple:
+    """(sorted unique vec_ids, indptr, query positions): the first-pass
+    shortlist as CSR, so a rerank kernel emits its (query, vec_id) rows
+    with one vectorized gather."""
+    order = np.lexsort((qpos, vids))
+    uv, start = np.unique(vids[order], return_index=True)
+    return uv, np.append(start, len(vids)).astype(np.int64), qpos[order]
+
+
+def _csr_gather(uv: np.ndarray, ptr: np.ndarray, qix: np.ndarray,
+                vids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(row, query) index pairs of a scanned batch: row i once per query
+    that shortlisted ``vids[i]``. A scanned id outside the union would
+    take a neighbour's query list, so it raises instead."""
+    pos = np.searchsorted(uv, vids)
+    if len(vids) and (
+        not len(uv) or (uv[np.minimum(pos, len(uv) - 1)] != vids).any()
+    ):
+        raise ValueError("rerank scanned a vec_id outside the candidates")
+    cnt = ptr[pos + 1] - ptr[pos]
+    row_rep = np.repeat(np.arange(len(vids)), cnt)
+    base = np.repeat(np.cumsum(cnt) - cnt, cnt)
+    intra = np.arange(int(cnt.sum()), dtype=np.int64) - base
+    return row_rep, qix[np.repeat(ptr[pos], cnt) + intra]
+
+
+def _allow_array(filter_ids) -> np.ndarray | None:
+    """An iterable allow-list as sorted unique int64 ids (None stays
+    None) — materialized once, so a generator is never consumed twice
+    and the small-filter switch counts distinct ids on every path."""
+    if filter_ids is None:
+        return None
+    return np.unique(np.fromiter((int(x) for x in filter_ids), np.int64))
+
+
+def _exact_switch(
+    index_dir: str, allow, filtered_exact_threshold: int,
+    approximate_threshold: int | None,
+) -> str | None:
+    """The driver-side exact switch: "filter" for an allow-list array of
+    at most ``filtered_exact_threshold`` ids (KNNSettings.java:87),
+    "size" for an index of at most ``approximate_threshold`` rows
+    (KNNSettings.java:70), None to probe. ``ivf_query_local`` and
+    ``ivf_query_batch`` both decide here."""
+    if isinstance(allow, np.ndarray) and (
+        0 < len(allow) <= filtered_exact_threshold
+    ):
+        return "filter"
+    th = (
+        APPROXIMATE_THRESHOLD
+        if approximate_threshold is None
+        else approximate_threshold
+    )
+    if _index_smaller_than(index_dir, th) is not None:
+        return "size"
+    return None
+
+
+def _all_cells(index_dir: str) -> list[int]:
+    """Every cell of the index: what an exact switch scans."""
+    _recover_cell_swaps(os.path.join(index_dir, "cells"))
+    cells, _ = _load_centroids(index_dir)
+    return sorted(int(c) for c in cells)
+
+
+def _batch_executor(
+    index_dir: str, cells: list[int], dim: int, allow
+) -> tuple[str, str]:
+    """("local" | "spark", reason). A batch runs on the driver when its
+    allow-list is in hand, its tombstones fit the driver id budget and
+    its cells' vectors fit ``LOCAL_IVF_MAX_BYTES`` — the rule of the BM25
+    ``_local_topk`` fast path and ``ivf_query_local``."""
+    if isinstance(allow, DataFrame):
+        return "spark", "filter_ids is a DataFrame"
+    n_tomb, tomb_ids = _tombstone_info(index_dir)
+    if n_tomb and tomb_ids is None:
+        return "spark", f"{n_tomb} tombstones > _TOMB_ISIN_MAX"
+    nbytes = _cells_vector_bytes(index_dir, cells, dim, LOCAL_IVF_MAX_BYTES)
+    if nbytes > LOCAL_IVF_MAX_BYTES:
+        return "spark", (
+            f"cells {nbytes / 1e6:.1f} MB > LOCAL_IVF_MAX_BYTES"
+        )
+    return "local", f"cells {nbytes / 1e6:.1f} MB <= LOCAL_IVF_MAX_BYTES"
+
+
+def _ranked_batch_frame(
+    spark, qids: list, qi: np.ndarray, vids: np.ndarray,
+    scores: np.ndarray, k: int, score_name: str,
+) -> DataFrame:
+    """The driver-local answer at the API edge: per query the best ``k``
+    by (score desc, vec_id asc), ranked and rounded by the same rule as
+    the Spark executor's window."""
+    schema = f"query_id string, vec_id long, {score_name} double, rank int"
+    if not len(vids):
+        return spark.createDataFrame([], schema)
+    order = np.lexsort((vids, -scores, qi))
+    qi, vids, scores = qi[order], vids[order], scores[order]
+    rank = np.arange(len(qi)) - np.searchsorted(qi, qi) + 1
+    keep = rank <= k
+    pdf = pd.DataFrame({
+        "query_id": np.asarray(qids, dtype=object)[qi[keep]],
+        "vec_id": vids[keep],
+        score_name: scores[keep],
+        "rank": rank[keep].astype(np.int32),
+    })
+    return spark.createDataFrame(pdf, schema).select(
+        "query_id", "vec_id", F.round(score_name, 6).alias(score_name),
+        "rank",
+    )
+
+
 def ivf_query_batch(
     spark,
     index_dir: str,
@@ -1885,54 +2071,85 @@ def ivf_query_batch(
     approximate_threshold: int | None = None,
 ) -> DataFrame:
     """(query_id, vec_id, cos|score, rank) for a BATCH of query vectors
-    in ONE pruned scan (the bm25_topk_batch analog — round 2 ran one
-    job per query vector). The driver probes the centroid table for
-    every query, unions the probed cell directories, ships a broadcast
-    (query matrix, per-cell query lists), and each Arrow batch scores
-    ONLY the queries that probed its cell — one matmul per cell group
-    for ALL of that cell's queries.
+    (the bm25_topk_batch analog — round 2 ran one job per query
+    vector). The driver plans once: the allow-list, the exact switches
+    (a small allow-list or a small index scans every cell, exactly —
+    KNNSettings.java:87 / :70), else every query's probe list, whose
+    union is the set of cells read.
 
-    With ``use_pq`` / ``use_sq`` the batch gets the same compression
-    economics as single-query ``ivf_query`` (round-3 verdict: the batch
-    path read full vectors, evaporating the PQ win exactly where it
-    pays most): pass 1 reads ONLY code columns of the probed cells, one
-    ADC gather / int8 matmul per cell group scores all of its queries,
-    each query keeps its best ``k * overquery`` candidates, and ONE
-    second read reranks the union of candidates against full vectors
-    (vec_id pushdown). Per-query results stay rank-identical to
-    ``ivf_query`` (same probe rule, same proxy, same budget).
-    ``metrics`` receives the batch bytes-scanned accounting;
-    ``filter_ids`` masks candidates before any budget (Q4); a small
-    allow-list takes the exact fallback for EVERY query in the batch
-    (one pushdown read, one kernel — KNNSettings.java:87 analog)."""
-    qids = [q[0] for q in queries]
-    Q = np.array([np.asarray(q[1], dtype=np.float64) for q in queries])
-    small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
-    if small is not None:
-        return _filtered_exact_batch(spark, index_dir, qids, Q, small,
-                                     k, space)
-    th_approx = (
-        APPROXIMATE_THRESHOLD
-        if approximate_threshold is None
-        else approximate_threshold
-    )
-    if _index_smaller_than(index_dir, th_approx) is not None:
-        # small-index exact bypass (approximate_threshold,
-        # KNNSettings.java:70): one full scan, one kernel scoring every
-        # query — bounded by the threshold, perfectly correct
-        return _filtered_exact_batch(
-            spark, index_dir, qids, Q, None, k, space,
-            filter_ids=filter_ids,
-        )
-    probes = {
-        qid: _probe_cells(index_dir, Q[i], n_probe, space)
-        for i, qid in enumerate(qids)
-    }
-    all_cells = sorted({c for ps in probes.values() for c in ps})
-    paths = _cell_paths(index_dir, all_cells)
-    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
+    Two executors run that plan with the same kernels and return the
+    same ids, ranks and rounded scores:
+      * local (no Spark job until the result DataFrame): when the
+        cells' vectors fit ``LOCAL_IVF_MAX_BYTES``, ``filter_ids`` is
+        absent, an iterable or a small DataFrame already collected, and
+        the tombstones fit the driver id budget. Float and exact forms
+        run each query through the open-once ``LocalIvfSearcher``;
+        quantized forms score the cached code columns per cell, then
+        gather and rerank only candidate rows;
+      * Spark otherwise: one pruned scan, each Arrow batch scoring only
+        the queries that probed its cell — one matmul per cell group
+        for ALL of that cell's queries.
+
+    With ``use_pq`` / ``use_sq`` the batch gets the compression
+    economics of single-query ``ivf_query``: pass 1 reads ONLY code
+    columns of the probed cells, one ADC gather / int8 matmul per cell
+    group scores all of its queries (``_first_pass``), each query keeps
+    its best ``k * overquery`` candidates, and the union of candidates
+    is reranked once against full vectors. Per-query results stay
+    rank-identical to ``ivf_query`` (same probe rule, same proxy, same
+    budget). ``metrics`` receives the batch bytes-scanned accounting
+    and ``executor`` / ``executor_reason``; ``filter_ids`` masks
+    candidates before any budget (Q4)."""
     score_name = "cos" if space == "cosine" else "score"
     out_schema = f"query_id string, vec_id long, {score_name} double"
+    if not queries:
+        return spark.createDataFrame([], out_schema + ", rank int")
+    qids = [q[0] for q in queries]
+    Q = np.array([np.asarray(q[1], dtype=np.float64) for q in queries])
+    if isinstance(filter_ids, DataFrame):
+        small = _allow_ids_if_small(filter_ids, filtered_exact_threshold)
+        allow = filter_ids if small is None else np.asarray(small, np.int64)
+    else:
+        allow = _allow_array(filter_ids)
+    exact = _exact_switch(
+        index_dir, allow, filtered_exact_threshold, approximate_threshold
+    )
+    if exact is not None:
+        cells = _all_cells(index_dir)
+        probes = [cells] * len(Q)
+    else:
+        probes = [
+            _probe_cells(index_dir, Q[i], n_probe, space)
+            for i in range(len(Q))
+        ]
+        cells = sorted({c for ps in probes for c in ps})
+    executor, reason = _batch_executor(index_dir, cells, Q.shape[1], allow)
+    if metrics is not None:
+        metrics["executor"], metrics["executor_reason"] = executor, reason
+    local = executor == "local"
+    if local and (exact is not None or not (use_pq or use_sq)):
+        searcher = _local_searcher(index_dir, space, LOCAL_IVF_MAX_BYTES)
+        ids, s = zip(*(
+            searcher.query(Q[i], k, allow=allow, probe=probes[i])
+            for i in range(len(Q))
+        ))
+        qi = np.repeat(np.arange(len(Q)), [len(x) for x in ids])
+        return _ranked_batch_frame(
+            spark, qids, qi, np.concatenate(ids), np.concatenate(s), k,
+            score_name,
+        )
+    if exact == "filter":
+        return _filtered_exact_batch(
+            spark, index_dir, qids, Q, allow.tolist(), k, space
+        )
+    if exact == "size":
+        # one full scan, one kernel scoring every query — bounded by
+        # the threshold, perfectly correct
+        return _filtered_exact_batch(
+            spark, index_dir, qids, Q, None, k, space, filter_ids=allow,
+        )
+    paths = _cell_paths(index_dir, cells)
+    deny = _deny_info(index_dir)  # tombstoned ids never match (liveDocs)
     if not paths:
         return spark.createDataFrame([], out_schema + ", rank int")
     if use_pq and use_sq:
@@ -1942,8 +2159,8 @@ def ivf_query_batch(
             f"quantized pass supports {QUANTIZABLE_SPACES}, got {space!r}"
         )
     cell_to_q: dict[int, list[int]] = {}
-    for i, qid in enumerate(qids):
-        for c in probes[qid]:
+    for i, ps in enumerate(probes):
+        for c in ps:
             cell_to_q.setdefault(c, []).append(i)
     base = os.path.join(index_dir, "cells")
     qnorms = np.linalg.norm(Q, axis=1)
@@ -1988,7 +2205,7 @@ def ivf_query_batch(
             .parquet(*paths)
         )
         scored = _apply_deny(
-            _apply_allow(scan, filter_ids), deny
+            _apply_allow(scan, allow), deny
         ).mapInPandas(kernel, schema=out_schema)
         w = Window.partitionBy("query_id").orderBy(
             F.desc(score_name), F.asc("vec_id")
@@ -2011,91 +2228,27 @@ def ivf_query_batch(
             raise ValueError(f"index at {index_dir} was built without pq_m")
         # (nq, m, n_codes) ADC tables — one per query, built driver-side
         T_all = np.stack([adc_table(Q[i], codebooks) for i in range(len(Q))])
-        pass1_schema = "vec_id long, norm double, code binary, cell int"
-        approx_cols = ("code", "norm")
+        code_cols = ("code",)
     else:
         T_all = None
-        pass1_schema = (
-            "vec_id long, norm double, sq_code binary, sq_scale double, "
-            "cell int"
-        )
-        approx_cols = ("sq_code", "sq_scale", "norm")
-
+        code_cols = ("sq_code", "sq_scale")
+    approx_cols = (*code_cols, "norm")
     budget = rescore_first_pass_k(k, Q.shape[1], overquery)
-    bc1 = spark.sparkContext.broadcast({
-        "Q": Q, "qids": qids, "cell_to_q": cell_to_q, "qn": qnorms,
-        "T": T_all, "budget": budget,
-    })
 
-    def approx_kernel(batches):
-        from ..functions.runtime import limit_worker_threads
-
-        limit_worker_threads()
-        from .quantize import sq_scores
-
-        state = bc1.value
-        Qm, ids, c2q = state["Q"], state["qids"], state["cell_to_q"]
-        qn, T, budget = state["qn"], state["T"], state["budget"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = {"query_id": [], "vec_id": [], "a": []}
-            for cell, grp in pdf.groupby("cell"):
-                idxs = c2q.get(int(cell), [])
-                if not idxs:
-                    continue
-                vids = grp["vec_id"].to_numpy()
-                norms = grp["norm"].to_numpy(dtype=np.float64)
-                if T is not None:  # PQ: one flat gather per cell group
-                    m, ncodes = T.shape[1], T.shape[2]
-                    Cb = np.frombuffer(
-                        b"".join(grp["code"].to_numpy()), dtype=np.uint8
-                    ).reshape(len(vids), m)
-                    flat_idx = (np.arange(m) * ncodes + Cb).ravel()
-                    lut = T[idxs].reshape(len(idxs), m * ncodes)
-                    dots = lut[:, flat_idx].reshape(
-                        len(idxs), len(vids), m
-                    ).sum(axis=2)  # (nq_c, b)
-                else:  # SQ: one int8->f64 matmul for all queries
-                    Cb = np.frombuffer(
-                        b"".join(grp["sq_code"].to_numpy()), dtype=np.int8
-                    ).reshape(len(vids), Qm.shape[1])
-                    scales = grp["sq_scale"].to_numpy(dtype=np.float64)
-                    dots = (
-                        (Cb.astype(np.float64) @ Qm[idxs].T) * scales[:, None]
-                    ).T  # (nq_c, b)
-                for j, qi in enumerate(idxs):
-                    a = _proxy_from_dots(dots[j], norms, qn[qi], space)
-                    # partial top-k per query per batch bounds the
-                    # shuffle: global budget is a subset of these
-                    if len(a) > budget:
-                        part = np.argpartition(-a, budget)[:budget]
-                    else:
-                        part = np.arange(len(a))
-                    out["query_id"].extend([ids[qi]] * len(part))
-                    out["vec_id"].extend(vids[part])
-                    out["a"].extend(a[part])
-            yield pd.DataFrame(out)
-
-    scan1 = (
-        spark.read.schema(pass1_schema).option("basePath", base)
-        .parquet(*paths)
-    )
-    approx = _apply_deny(_apply_allow(scan1, filter_ids), deny).mapInPandas(
-        approx_kernel, schema="query_id string, vec_id long, a double"
-    )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("a"), F.asc("vec_id"))
-    cand_rows = (
-        approx.withColumn("r", F.row_number().over(w1))
-        .filter(F.col("r") <= budget)
-        .select("query_id", "vec_id")
-        .collect()
-    )
-    if metrics is not None:
-        union_ids = {r["vec_id"] for r in cand_rows}
-        metrics.update(
-            _pq_bytes_metrics(paths, len(union_ids), approx_cols)
+    if local:
+        searcher = _local_searcher(index_dir, space, LOCAL_IVF_MAX_BYTES)
+        loaded = searcher.load_cells(cells, code_cols)
+        csr = _local_first_pass(
+            loaded, cell_to_q, allow, Q, qnorms, T_all, space, budget,
+            code_cols,
         )
+    else:
+        csr = _spark_first_pass(
+            spark, paths, base, allow, deny, qids, Q, qnorms, cell_to_q,
+            T_all, space, budget,
+        )
+    if metrics is not None:
+        metrics.update(_pq_bytes_metrics(paths, len(csr[0]), approx_cols))
         metrics["n_queries"] = len(qids)
         # the batch reads the code columns ONCE for all queries and
         # reranks the (overlapping) candidate union once — the fair
@@ -2109,29 +2262,18 @@ def ivf_query_batch(
             / max(1, metrics["amortized_bytes_per_query"]),
             2,
         )
-    if not cand_rows:
+    if not len(csr[0]):
         return spark.createDataFrame([], out_schema + ", rank int")
+    if local:
+        return _ranked_batch_frame(
+            spark, qids, *_local_rerank(loaded, csr, Q, qnorms, space), k,
+            score_name,
+        )
 
     # pass 2: ONE exact read of the candidate union (vec_id pushdown),
-    # each vector scored only for the queries that shortlisted it.
-    # The (vec_id -> query list) map ships as CSR arrays so the kernel
-    # emits rows with a fully VECTORIZED gather — round 4 looped
-    # per-row python here (bounded by budget x queries, but a loop in
-    # the rerank hot path all the same).
-    vid_to_q: dict[int, list[int]] = {}
-    qpos = {qid: i for i, qid in enumerate(qids)}
-    for r in cand_rows:
-        vid_to_q.setdefault(r["vec_id"], []).append(qpos[r["query_id"]])
-    uvids = np.array(sorted(vid_to_q), dtype=np.int64)
-    csr_cnt = np.array([len(vid_to_q[v]) for v in uvids], dtype=np.int64)
-    indptr = np.concatenate(([0], np.cumsum(csr_cnt)))
-    qidx = (
-        np.concatenate(
-            [np.asarray(vid_to_q[v], dtype=np.int64) for v in uvids]
-        )
-        if len(uvids)
-        else np.empty(0, np.int64)
-    )
+    # each vector scored only for the queries that shortlisted it — the
+    # CSR map lets the kernel emit rows with one vectorized gather
+    uvids, indptr, qidx = csr
     bc2 = spark.sparkContext.broadcast(
         {
             "Q": Q, "qids": np.asarray(qids, dtype=object), "qn": qnorms,
@@ -2153,17 +2295,9 @@ def ivf_query_batch(
             vids = pdf["vec_id"].to_numpy()
             norms = pdf["norm"].to_numpy(dtype=np.float64)
             S = _np_exact_batch(M, norms, Qm, qn, space)  # (b, nq)
-            # every scanned vid is in the union (the scan is pushdown/
-            # semi-join filtered on exactly these ids)
-            pos = np.searchsorted(uv, vids)
-            cnt = ptr[pos + 1] - ptr[pos]
-            nsel = int(cnt.sum())
-            if nsel == 0:
+            row_rep, flat = _csr_gather(uv, ptr, qix, vids)
+            if not len(flat):
                 continue
-            row_rep = np.repeat(np.arange(len(vids)), cnt)
-            base = np.repeat(np.cumsum(cnt) - cnt, cnt)
-            intra = np.arange(nsel, dtype=np.int64) - base
-            flat = qix[np.repeat(ptr[pos], cnt) + intra]
             yield pd.DataFrame(
                 {
                     "query_id": ids[flat],
@@ -2172,7 +2306,7 @@ def ivf_query_batch(
                 }
             )
 
-    union = sorted(vid_to_q)
+    union = uvids.tolist()
     scan2 = spark.read.schema(
         "vec_id long, v array<double>, norm double"
     ).parquet(*paths)
@@ -2199,6 +2333,135 @@ def ivf_query_batch(
             "query_id", "vec_id",
             F.round(score_name, 6).alias(score_name), "rank",
         )
+    )
+
+
+def _spark_first_pass(
+    spark, paths, base, allow, deny, qids, Q, qnorms, cell_to_q, T, space,
+    budget,
+) -> tuple:
+    """Distributed quantized first pass: ``_first_pass`` per cell group
+    of each Arrow batch over the code columns only, then a per-query
+    (proxy desc, vec_id asc) window keeps ``budget``. Returns the
+    candidate CSR."""
+    if T is not None:
+        pass1_schema = "vec_id long, norm double, code binary, cell int"
+    else:
+        pass1_schema = (
+            "vec_id long, norm double, sq_code binary, sq_scale double, "
+            "cell int"
+        )
+    bc1 = spark.sparkContext.broadcast({
+        "Q": Q, "qids": qids, "cell_to_q": cell_to_q, "qn": qnorms,
+        "T": T, "budget": budget,
+    })
+
+    def approx_kernel(batches):
+        from ..functions.runtime import limit_worker_threads
+
+        limit_worker_threads()
+        state = bc1.value
+        Qm, ids, c2q = state["Q"], state["qids"], state["cell_to_q"]
+        qn, Tm, budget = state["qn"], state["T"], state["budget"]
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out = {"query_id": [], "vec_id": [], "a": []}
+            for cell, grp in pdf.groupby("cell"):
+                idxs = c2q.get(int(cell), [])
+                if not idxs:
+                    continue
+                vids = grp["vec_id"].to_numpy()
+                cols = {"norm": grp["norm"].to_numpy(dtype=np.float64)}
+                if Tm is not None:
+                    cols["code"] = np.frombuffer(
+                        b"".join(grp["code"].to_numpy()), dtype=np.uint8
+                    ).reshape(len(vids), Tm.shape[1])
+                else:
+                    cols["sq_code"] = np.frombuffer(
+                        b"".join(grp["sq_code"].to_numpy()), dtype=np.int8
+                    ).reshape(len(vids), Qm.shape[1])
+                    cols["sq_scale"] = grp["sq_scale"].to_numpy(
+                        dtype=np.float64
+                    )
+                for qi, pos, a in _first_pass(
+                    cols, idxs, Qm, qn, Tm, space, budget
+                ):
+                    out["query_id"].extend([ids[qi]] * len(pos))
+                    out["vec_id"].extend(vids[pos])
+                    out["a"].extend(a)
+            yield pd.DataFrame(out)
+
+    scan1 = (
+        spark.read.schema(pass1_schema).option("basePath", base)
+        .parquet(*paths)
+    )
+    approx = _apply_deny(_apply_allow(scan1, allow), deny).mapInPandas(
+        approx_kernel, schema="query_id string, vec_id long, a double"
+    )
+    w1 = Window.partitionBy("query_id").orderBy(F.desc("a"), F.asc("vec_id"))
+    rows = (
+        approx.withColumn("r", F.row_number().over(w1))
+        .filter(F.col("r") <= budget)
+        .select("query_id", "vec_id")
+        .collect()
+    )
+    qpos = {qid: i for i, qid in enumerate(qids)}
+    return _candidate_csr(
+        np.array([r["vec_id"] for r in rows], dtype=np.int64),
+        np.array([qpos[r["query_id"]] for r in rows], dtype=np.int64),
+    )
+
+
+def _local_first_pass(
+    loaded, cell_to_q, allow, Q, qnorms, T, space, budget, code_cols
+) -> tuple:
+    """Driver form of the quantized first pass: ``_first_pass`` over each
+    cached cell's code columns (allow-listed rows only), then per query
+    the best ``budget`` by (proxy desc, vec_id asc) — the Spark window's
+    rule. Returns the candidate CSR."""
+    got: list[list] = [[] for _ in range(len(Q))]
+    for c, cols, _ in loaded:
+        if allow is not None:
+            rows = np.isin(cols["vec_id"], allow)
+            cols = {n: cols[n][rows] for n in ("vec_id", "norm", *code_cols)}
+        for qi, pos, a in _first_pass(
+            cols, cell_to_q[c], Q, qnorms, T, space, budget
+        ):
+            got[qi].append((cols["vec_id"][pos], a))
+    vids, qpos = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for qi, parts in enumerate(got):
+        if not parts:
+            continue
+        v = np.concatenate([p[0] for p in parts])
+        a = np.concatenate([p[1] for p in parts])
+        top = np.lexsort((v, -a))[:budget]
+        vids.append(v[top])
+        qpos.append(np.full(len(top), qi, dtype=np.int64))
+    return _candidate_csr(np.concatenate(vids), np.concatenate(qpos))
+
+
+def _local_rerank(loaded, csr, Q, qnorms, space) -> tuple:
+    """Exact rerank of the candidate union on the driver: per cell,
+    gather ONLY the candidate rows, score them against every query with
+    the Spark rerank kernel's ``_np_exact_batch`` and emit (query
+    index, vec_id, score) through the same CSR gather."""
+    uv, ptr, qix = csr
+    out_q, out_v, out_s = [], [], []
+    for _, cols, _ in loaded:
+        rows = np.flatnonzero(np.isin(cols["vec_id"], uv))
+        if not len(rows):
+            continue
+        vids = cols["vec_id"][rows]
+        S = _np_exact_batch(
+            cols["v"][rows], cols["norm"][rows], Q, qnorms, space
+        )
+        row_rep, flat = _csr_gather(uv, ptr, qix, vids)
+        out_q.append(flat)
+        out_v.append(vids[row_rep])
+        out_s.append(S[row_rep, flat])
+    return (
+        np.concatenate(out_q), np.concatenate(out_v), np.concatenate(out_s)
     )
 
 
@@ -2232,16 +2495,40 @@ def _cell_dir_sig(path: str) -> tuple:
     return (st.st_ino, st.st_mtime_ns, st.st_nlink)
 
 
-def _local_cells(index_dir: str, cells: list[int], tomb_sig=None,
-                 tomb_ids=None):
-    """Load (and LRU-cache) the probed cells' (ids, vectors, norms)
-    into driver numpy arrays via pyarrow — no Spark job. Cache key is
-    (index_dir, cell); the fast directory signature invalidates on
-    appends/rebuilds. Tombstone masking is applied ONCE per (cell,
-    tombstone-ledger version) and the masked view cached — per-query
-    cost is a dict hit, not an isin."""
+#: numpy dtype of each fixed-width code column a cell may carry
+_CODE_DTYPE = {"code": np.uint8, "sq_code": np.int8}
+
+
+def _read_cell(path: str, columns) -> dict:
+    """One cell's columns as numpy arrays that OWN their memory: one
+    copy out of the Arrow views, so the read's Arrow buffers all go
+    back to its pool (cached views would pin them among freed read
+    scratch: ~10 MB more peak driver RSS over 30k 128-d vectors)."""
     import pyarrow.parquet as papq
 
+    t = papq.read_table(path, columns=["vec_id", *columns])
+    out = {}
+    for c in t.column_names:
+        if c == "v":
+            a = _list_matrix(t[c])
+        elif c in _CODE_DTYPE:
+            a = _binary_matrix(t[c], _CODE_DTYPE[c])
+        else:  # vec_id, norm, sq_scale
+            a = t[c].to_numpy()
+        out[c] = np.array(a)
+    return out
+
+
+def _local_cells(index_dir: str, cells: list[int], tomb_sig=None,
+                 tomb_ids=None, columns=()):
+    """Load (and LRU-cache) the cells' vec_id, v, norm and any extra
+    ``columns`` (quantizer codes, read once when first asked for) into
+    driver numpy arrays via pyarrow — no Spark job. Returns (cell, live
+    columns, aux) per existing cell. Cache key is (index_dir, cell); the
+    fast directory signature invalidates on appends/rebuilds. Tombstone
+    masking is applied ONCE per (cell, tombstone-ledger version) and
+    the masked view cached — per-query cost is a dict hit, not an
+    isin."""
     out = []
     for c in cells:
         p = os.path.join(index_dir, "cells", f"cell={c}")
@@ -2253,28 +2540,63 @@ def _local_cells(index_dir: str, cells: list[int], tomb_sig=None,
             _LOCAL_IVF_CACHE.pop(key)
             continue
         if entry is None or entry["sig"] != sig:
-            t = papq.read_table(p, columns=["vec_id", "v", "norm"])
-            ids = np.asarray(t["vec_id"].to_pylist(), dtype=np.int64)
-            M = np.array(t["v"].to_pylist(), dtype=np.float64)
-            norms = np.asarray(t["norm"].to_pylist(), dtype=np.float64)
+            raw = _read_cell(p, ("v", "norm", *columns))
             entry = {
-                "sig": sig, "raw": (ids, M, norms),
-                "tomb_sig": None, "live": (ids, M, norms), "aux": {},
+                "sig": sig, "raw": raw, "tomb_sig": None, "live": raw,
+                "aux": {},
             }
-            _LOCAL_IVF_CACHE.put(
-                key, entry, M.nbytes + ids.nbytes + norms.nbytes
-            )
-        if entry["tomb_sig"] != tomb_sig:
-            ids, M, norms = entry["raw"]
+            _LOCAL_IVF_CACHE.put(key, entry, _nbytes(raw))
+        missing = [col for col in columns if col not in entry["raw"]]
+        if missing:
+            add = _read_cell(p, missing)
+            if not np.array_equal(add.pop("vec_id"), entry["raw"]["vec_id"]):
+                raise RuntimeError(f"{p} changed between column reads")
+            entry["raw"] = {**entry["raw"], **add}
+            _LOCAL_IVF_CACHE.put(key, entry, _nbytes(entry["raw"]))
+        if missing or entry["tomb_sig"] != tomb_sig:
+            raw = entry["raw"]
             if tomb_ids is not None and len(tomb_ids):
-                live = ~np.isin(ids, tomb_ids)
-                entry["live"] = (ids[live], M[live], norms[live])
+                live = ~np.isin(raw["vec_id"], tomb_ids)
+                entry["live"] = {col: a[live] for col, a in raw.items()}
             else:
-                entry["live"] = entry["raw"]
+                entry["live"] = raw
             entry["tomb_sig"] = tomb_sig
             entry["aux"] = {}  # per-space precomputations track live
-        out.append((*entry["live"], entry["aux"]))
+        out.append((c, entry["live"], entry["aux"]))
     return out
+
+
+def _nbytes(cols: dict) -> int:
+    return sum(a.nbytes for a in cols.values())
+
+
+def _cells_vector_bytes(
+    index_dir: str, cells: list[int], dim: int, cap: int
+) -> int:
+    """Driver bytes the cells' float64 vectors take (or would take):
+    the cached arrays when fresh, else parquet footer row counts — no
+    data page read. Stops counting once past ``cap``."""
+    import pyarrow.parquet as papq
+
+    total = 0
+    for c in cells:
+        if total > cap:
+            break
+        p = os.path.join(index_dir, "cells", f"cell={c}")
+        try:
+            sig = _cell_dir_sig(p)
+        except FileNotFoundError:
+            continue
+        entry = _LOCAL_IVF_CACHE.get((index_dir, c))
+        if entry is not None and entry["sig"] == sig:
+            total += entry["raw"]["v"].nbytes
+            continue
+        for base, _, files in os.walk(p):
+            for fn in files:
+                if fn.endswith(".parquet"):
+                    md = papq.ParquetFile(os.path.join(base, fn)).metadata
+                    total += md.num_rows * dim * 8
+    return total
 
 
 class LocalIvfSearcher:
@@ -2325,6 +2647,15 @@ class LocalIvfSearcher:
         if getattr(self, "_C", None) is not C:
             self._probe_aux: dict = {}
         self._cells, self._C = cells, C
+
+    def load_cells(self, cells: list[int], columns=()) -> list:
+        """Live (tombstone-masked) columns of ``cells`` from the shared
+        driver cache, after the same staleness checks as ``query``:
+        (cell, {vec_id, v, norm, *columns}, aux) per existing cell."""
+        self._bind()
+        return _local_cells(
+            self.index_dir, cells, self._tomb_sig, self._tomb_ids, columns
+        )
 
     def _refresh_tombs(self) -> None:
         n_tomb, tomb_ids = _tombstone_info(self.index_dir)
@@ -2430,13 +2761,7 @@ class LocalIvfSearcher:
         operation order)."""
         qv = np.asarray(query_vec, dtype=np.float64)
         if check_stale:
-            cells_dir = os.path.join(self.index_dir, "cells")
-            if os.path.isdir(cells_dir):
-                _recover_cell_swaps(cells_dir)
-            self._coarse = _has_coarse(self.index_dir)
-            if not self._coarse:
-                self._set_centroids(*_load_centroids(self.index_dir))
-            self._refresh_tombs()
+            self._bind()
         if probe is None:
             probe = self.probe(qv, n_probe)
         loaded = _local_cells(
@@ -2444,7 +2769,7 @@ class LocalIvfSearcher:
         )
         if not loaded:
             return (np.empty(0, np.int64), np.empty(0, np.float64))
-        tot = sum(m.nbytes for _, m, _, _ in loaded)
+        tot = sum(cols["v"].nbytes for _, cols, _ in loaded)
         if tot > self.max_bytes:
             raise ValueError(
                 f"probed cells hold {tot} vector bytes > max_bytes="
@@ -2455,7 +2780,8 @@ class LocalIvfSearcher:
         qn_guard = qn if qn != 0 else 1.0
         qsq = float((qv * qv).sum())
         cand_ids, cand_s = [], []
-        for ids, M, norms, aux in loaded:
+        for _, cols, aux in loaded:
+            ids, M, norms = cols["vec_id"], cols["v"], cols["norm"]
             if allow is not None:
                 m = np.isin(ids, allow)
                 if not m.any():
@@ -2469,11 +2795,7 @@ class LocalIvfSearcher:
                 keep = s >= min_score
                 ids, s = ids[keep], s[keep]
             elif len(s) > k:
-                # tie-safe cut: keep EVERYTHING scoring >= the kth
-                # best, so the global (score, id) tie-break can never
-                # lose a tied candidate to an arbitrary partition cut
-                kth = np.partition(s, len(s) - k)[len(s) - k]
-                keep = s >= kth
+                keep = _tie_safe_top(s, k)
                 ids, s = ids[keep], s[keep]
             cand_ids.append(ids)
             cand_s.append(s)
@@ -2487,8 +2809,19 @@ class LocalIvfSearcher:
         return ids[order], s[order]
 
 
-#: (index_dir, space) -> LocalIvfSearcher for the functional wrapper
+#: (index_dir, space) -> LocalIvfSearcher for the functional wrappers
 _LOCAL_SEARCHERS: dict = {}
+
+
+def _local_searcher(
+    index_dir: str, space: str, max_bytes: int
+) -> LocalIvfSearcher:
+    key = (index_dir, space)
+    searcher = _LOCAL_SEARCHERS.get(key)
+    if searcher is None or searcher.max_bytes != max_bytes:
+        searcher = LocalIvfSearcher(index_dir, space, max_bytes)
+        _LOCAL_SEARCHERS[key] = searcher
+    return searcher
 
 
 def ivf_query_local(
@@ -2517,38 +2850,19 @@ def ivf_query_local(
     ``filter_ids`` accepts an iterable of ids; small allow-lists take
     the exact fallback (every cell probed — KNNSettings.java:87).
     Returns a pandas DataFrame (vec_id, cos|score, rank)."""
-    key = (index_dir, space)
-    searcher = _LOCAL_SEARCHERS.get(key)
-    if searcher is None or searcher.max_bytes != max_bytes:
-        searcher = LocalIvfSearcher(index_dir, space, max_bytes)
-        _LOCAL_SEARCHERS[key] = searcher
-    qv = np.asarray(query_vec, dtype=np.float64)
-    allow = None
+    searcher = _local_searcher(index_dir, space, max_bytes)
+    allow = _allow_array(filter_ids)
+    # an exact switch (small allow-list, KNNSettings.java:87; small
+    # index, :70) scans EVERY cell so no allowed id can hide in an
+    # unprobed one — still bounded by max_bytes, and perfectly correct.
+    # The memoized early-exit footer count keeps the warm-path decision
+    # to one scandir (~us), preserving the ms/op budget.
     probe = None
-    if filter_ids is not None:
-        allow = np.fromiter((int(x) for x in filter_ids), dtype=np.int64)
-        if 0 < len(allow) <= filtered_exact_threshold:
-            # small-filter exact fallback (KNNSettings.java:87): scan
-            # EVERY cell so no allowed id can hide in an unprobed one —
-            # still bounded by max_bytes, and perfectly correct
-            _recover_cell_swaps(os.path.join(index_dir, "cells"))
-            cells_all, _ = _load_centroids(index_dir)
-            probe = sorted(int(c) for c in cells_all)
-    if probe is None:
-        # small-INDEX exact bypass (approximate_threshold,
-        # KNNSettings.java:70): below the size threshold probing is
-        # pointless — scan every cell, still bounded by max_bytes.
-        # The memoized early-exit footer count keeps the warm-path
-        # decision to one scandir (~us), preserving the ms/op budget.
-        th_approx = (
-            APPROXIMATE_THRESHOLD
-            if approximate_threshold is None
-            else approximate_threshold
-        )
-        if _index_smaller_than(index_dir, th_approx) is not None:
-            _recover_cell_swaps(os.path.join(index_dir, "cells"))
-            cells_all, _ = _load_centroids(index_dir)
-            probe = sorted(int(c) for c in cells_all)
+    if _exact_switch(
+        index_dir, allow, filtered_exact_threshold, approximate_threshold
+    ):
+        probe = _all_cells(index_dir)
+    qv = np.asarray(query_vec, dtype=np.float64)
     ids, s = searcher.query(
         qv, k, n_probe, min_score=min_score, allow=allow, probe=probe
     )
@@ -2806,7 +3120,7 @@ def _tombstone_info(index_dir: str) -> tuple[int, np.ndarray | None]:
     # is genuinely over the In()-predicate limit
     if n and n <= _TOMB_ISIN_MAX * 4:
         t = pa.concat_tables([papq.read_table(p) for p in files])
-        uniq = np.unique(np.asarray(t["vec_id"].to_pylist(), dtype=np.int64))
+        uniq = np.unique(np.asarray(t["vec_id"].to_numpy(), dtype=np.int64))
         n = len(uniq)  # overlapping delete batches dedupe here
         if n <= _TOMB_ISIN_MAX:
             ids = uniq

@@ -27,3 +27,30 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def batch_executors(monkeypatch):
+    """Iterate ``batch_executors()`` to run a test body under both
+    ``ivf_query_batch`` executors: "local" as configured (at least one
+    batch of the turn must run there), then "spark" with
+    ``LOCAL_IVF_MAX_BYTES = 0`` so that no batch fits the driver."""
+    from opensearch_jvector_spark.operators import similarity
+
+    real = similarity._batch_executor
+
+    def each():
+        for name in ("local", "spark"):
+            seen = []
+            with monkeypatch.context() as m:
+                if name == "spark":
+                    m.setattr(similarity, "LOCAL_IVF_MAX_BYTES", 0)
+                m.setattr(
+                    similarity, "_batch_executor",
+                    lambda *a: seen.append(real(*a)) or seen[-1],
+                )
+                yield name
+            ran = [ex for ex, _ in seen]
+            assert name in ran and (name == "local" or set(ran) == {name})
+
+    return each

@@ -47,7 +47,7 @@ def _ranks(df):
     return [(r["vec_id"], r["rank"]) for r in df.collect()]
 
 
-def test_delete_masks_every_query_path(spark, tmp_path):
+def test_delete_masks_every_query_path(spark, tmp_path, batch_executors):
     d = _build(spark, tmp_path, pq_m=8, sq=True)
     q = _qvec(spark)
     # delete the current top-3 so the mask visibly reshapes the result
@@ -79,19 +79,20 @@ def test_delete_masks_every_query_path(spark, tmp_path):
     rad_ids = {r["vec_id"] for r in rad.collect()}
     assert rad_ids.isdisjoint(dead) and rad_ids
 
-    batch = ivf_query_batch(
-        spark, d, [("q0", q)], k=10, n_probe=N_CELLS
-    )
-    assert [
-        (r["vec_id"], r["rank"]) for r in batch.collect()
-    ] == expect
-    batch_pq = ivf_query_batch(
-        spark, d, [("q0", q)], k=10, n_probe=N_CELLS, use_pq=True,
-        overquery=50,
-    )
-    assert [
-        (r["vec_id"], r["rank"]) for r in batch_pq.collect()
-    ] == expect
+    for _ in batch_executors():
+        batch = ivf_query_batch(
+            spark, d, [("q0", q)], k=10, n_probe=N_CELLS
+        )
+        assert [
+            (r["vec_id"], r["rank"]) for r in batch.collect()
+        ] == expect
+        batch_pq = ivf_query_batch(
+            spark, d, [("q0", q)], k=10, n_probe=N_CELLS, use_pq=True,
+            overquery=50,
+        )
+        assert [
+            (r["vec_id"], r["rank"]) for r in batch_pq.collect()
+        ] == expect
 
 
 def test_compact_rewrites_only_affected_cells(spark, tmp_path):

@@ -118,20 +118,23 @@ def test_radial_bypass_is_whole_index(spark, idx):
     assert len(starved) < len(exact)
 
 
-def test_batch_bypass_matches_per_query_bruteforce(spark, idx):
+def test_batch_bypass_matches_per_query_bruteforce(
+    spark, idx, batch_executors
+):
     queries = [(f"q{i}", _qvec(spark, vid=v))
                for i, v in enumerate([0, 7, 21])]
-    got = ivf_query_batch(spark, idx, queries, k=5, n_probe=1,
-                          approximate_threshold=15_000)
-    for qid, qv in queries:
-        per_q = [
-            (r["vec_id"], r["cos"], r["rank"])
-            for r in got.filter(F.col("query_id") == qid)
-            .orderBy("rank").collect()
-        ]
-        truth = _rows(topk_bruteforce(_emb(spark), qv, 5, "cosine",
-                                      score_name="cos"))
-        assert per_q == truth
+    for _ in batch_executors():
+        got = ivf_query_batch(spark, idx, queries, k=5, n_probe=1,
+                              approximate_threshold=15_000)
+        for qid, qv in queries:
+            per_q = [
+                (r["vec_id"], r["cos"], r["rank"])
+                for r in got.filter(F.col("query_id") == qid)
+                .orderBy("rank").collect()
+            ]
+            truth = _rows(topk_bruteforce(_emb(spark), qv, 5, "cosine",
+                                          score_name="cos"))
+            assert per_q == truth
 
 
 def test_count_early_exit_memo(idx):

@@ -285,7 +285,9 @@ def test_pq_recall_compression_and_rerank_exactness(spark, tmp_path):
     assert msq["compression_ratio"] >= 2.0, msq
 
 
-def test_ivf_batch_rank_identical_constant_jobs(spark, tmp_path):
+def test_ivf_batch_rank_identical_constant_jobs(
+    spark, tmp_path, batch_executors
+):
     """ivf_query_batch answers N queries in one pruned scan: per-query
     results rank-identical to single-query ivf_query, and the Spark
     job count does not grow with the number of queries (round 2 ran
@@ -313,28 +315,29 @@ def test_ivf_batch_rank_identical_constant_jobs(spark, tmp_path):
         j = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
         return j if isinstance(j, int) else j.get()
 
-    j0 = job_count()
-    one = ivf_query_batch(
-        spark, index_dir, [("q0", vecs[0])], 5, n_probe=4
-    ).collect()
-    jobs_one = job_count() - j0
-    j1 = job_count()
-    batch = ivf_query_batch(
-        spark, index_dir, [(f"q{i}", v) for i, v in vecs.items()], 5, n_probe=4
-    ).collect()
-    jobs_batch = job_count() - j1
-    assert jobs_batch <= jobs_one + 1  # constant in N, not N jobs
+    for _ in batch_executors():
+        j0 = job_count()
+        one = ivf_query_batch(
+            spark, index_dir, [("q0", vecs[0])], 5, n_probe=4
+        ).collect()
+        jobs_one = job_count() - j0
+        j1 = job_count()
+        batch = ivf_query_batch(
+            spark, index_dir, [(f"q{i}", v) for i, v in vecs.items()], 5, n_probe=4
+        ).collect()
+        jobs_batch = job_count() - j1
+        assert jobs_batch <= jobs_one + 1  # constant in N, not N jobs
 
-    per_q = {}
-    for r in batch:
-        per_q.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.cos))
-    for qid, v in vecs.items():
-        single = [
-            (r.rank, r.vec_id, r.cos)
-            for r in ivf_query(spark, index_dir, v, 5, n_probe=4).collect()
-        ]
-        assert sorted(per_q[f"q{qid}"]) == sorted(single), qid
-    assert {r.query_id for r in one} == {"q0"}
+        per_q = {}
+        for r in batch:
+            per_q.setdefault(r.query_id, []).append((r.rank, r.vec_id, r.cos))
+        for qid, v in vecs.items():
+            single = [
+                (r.rank, r.vec_id, r.cos)
+                for r in ivf_query(spark, index_dir, v, 5, n_probe=4).collect()
+            ]
+            assert sorted(per_q[f"q{qid}"]) == sorted(single), qid
+        assert {r.query_id for r in one} == {"q0"}
 
 
 def _high_dim_embs(spark, n_rows: int, dim: int):

@@ -130,30 +130,31 @@ def test_fallback_local_parity(spark, idx):
     assert len(dist) == 10
 
 
-def test_fallback_batch_parity(spark, idx):
+def test_fallback_batch_parity(spark, idx, batch_executors):
     vecs = {i: _qvec(spark, i) for i in (0, 21)}
     q0 = vecs[0]
     allow = _adversarial_allow(spark, idx, q0, n_probe=1)
-    rows = ivf_query_batch(
-        spark, idx, [(f"q{i}", v) for i, v in vecs.items()], k=5,
-        n_probe=1, filter_ids=allow,
-    ).collect()
-    for i, v in vecs.items():
-        single = [
-            (r["vec_id"], r["cos"], r["rank"])
-            for r in ivf_query(
-                spark, idx, v, k=5, n_probe=1, filter_ids=allow
-            ).collect()
-        ]
-        got = sorted(
-            [
+    for _ in batch_executors():
+        rows = ivf_query_batch(
+            spark, idx, [(f"q{i}", v) for i, v in vecs.items()], k=5,
+            n_probe=1, filter_ids=allow,
+        ).collect()
+        for i, v in vecs.items():
+            single = [
                 (r["vec_id"], r["cos"], r["rank"])
-                for r in rows
-                if r["query_id"] == f"q{i}"
-            ],
-            key=lambda t: t[2],
-        )
-        assert got == single, i
+                for r in ivf_query(
+                    spark, idx, v, k=5, n_probe=1, filter_ids=allow
+                ).collect()
+            ]
+            got = sorted(
+                [
+                    (r["vec_id"], r["cos"], r["rank"])
+                    for r in rows
+                    if r["query_id"] == f"q{i}"
+                ],
+                key=lambda t: t[2],
+            )
+            assert got == single, i
 
 
 def test_fallback_radial(spark, idx):

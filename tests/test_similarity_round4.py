@@ -170,7 +170,9 @@ def test_radial_threshold_rules():
 # ------------------------------------------------- quantized batch IVF
 
 
-def test_batch_quantized_rank_identical_and_compression(spark, ivf_dir):
+def test_batch_quantized_rank_identical_and_compression(
+    spark, ivf_dir, batch_executors
+):
     """The round-3 gap closed: the batch kernel scores CODES first
     (one ADC gather / int8 matmul per cell group for all of that
     cell's queries) and reranks the candidate union once. Per-query
@@ -181,54 +183,64 @@ def test_batch_quantized_rank_identical_and_compression(spark, ivf_dir):
     qids = (0, 7, 21, 42)
     vecs = {i: _qvec(spark, i) for i in qids}
     queries = [(f"q{i}", vecs[i]) for i in qids]
-    for kw in ({"use_pq": True}, {"use_sq": True}):
-        # rank-identity at an exactness-restoring overquery
-        batch = ivf_query_batch(
-            spark, ivf_dir, queries, k=5, n_probe=4, overquery=50, **kw
-        ).collect()
-        by_q = {}
-        for r in batch:
-            by_q.setdefault(r.query_id, []).append(
-                (r.vec_id, r.cos, r.rank)
-            )
-        for i in qids:
-            single = [
-                (r.vec_id, r.cos, r.rank)
-                for r in ivf_query(
-                    spark, ivf_dir, vecs[i], 5, n_probe=4, overquery=50,
-                    **kw,
-                ).collect()
-            ]
-            assert by_q[f"q{i}"] == single, (kw, i)
-        # compression economics at a REAL pruning overquery: the batch
-        # pays the code scan once for all queries, so per-query
-        # amortized bytes must beat the single-query cost
-        bm: dict = {}
-        ivf_query_batch(
-            spark, ivf_dir, queries, k=5, n_probe=4, overquery=8,
-            metrics=bm, **kw,
-        ).collect()
-        sm: dict = {}
-        ivf_query(
-            spark, ivf_dir, vecs[0], 5, n_probe=4, overquery=8,
-            metrics=sm, **kw,
-        ).collect()
-        assert bm["amortized_bytes_per_query"] < bm["unquantized_bytes"], bm
-        assert (
-            bm["amortized_compression_ratio"] >= sm["compression_ratio"]
-        ), (bm, sm)
-        # and the whole batch costs less than N independent queries
-        assert (
-            bm["bytes_scanned"] < len(qids) * sm["bytes_scanned"]
-        ), (bm, sm)
+    for _ in batch_executors():
+        for kw in ({"use_pq": True}, {"use_sq": True}):
+            # rank-identity at an exactness-restoring overquery
+            batch = ivf_query_batch(
+                spark, ivf_dir, queries, k=5, n_probe=4, overquery=50, **kw
+            ).collect()
+            by_q = {}
+            for r in batch:
+                by_q.setdefault(r.query_id, []).append(
+                    (r.vec_id, r.cos, r.rank)
+                )
+            for i in qids:
+                single = [
+                    (r.vec_id, r.cos, r.rank)
+                    for r in ivf_query(
+                        spark, ivf_dir, vecs[i], 5, n_probe=4, overquery=50,
+                        **kw,
+                    ).collect()
+                ]
+                assert by_q[f"q{i}"] == single, (kw, i)
+            # compression economics at a REAL pruning overquery: the batch
+            # pays the code scan once for all queries, so per-query
+            # amortized bytes must beat the single-query cost
+            bm: dict = {}
+            ivf_query_batch(
+                spark, ivf_dir, queries, k=5, n_probe=4, overquery=8,
+                metrics=bm, **kw,
+            ).collect()
+            sm: dict = {}
+            ivf_query(
+                spark, ivf_dir, vecs[0], 5, n_probe=4, overquery=8,
+                metrics=sm, **kw,
+            ).collect()
+            assert bm["amortized_bytes_per_query"] < bm["unquantized_bytes"], bm
+            assert (
+                bm["amortized_compression_ratio"] >= sm["compression_ratio"]
+            ), (bm, sm)
+            # and the whole batch costs less than N independent queries
+            assert (
+                bm["bytes_scanned"] < len(qids) * sm["bytes_scanned"]
+            ), (bm, sm)
 
 
-def test_batch_filtered(spark, ivf_dir):
+def test_batch_filtered(spark, ivf_dir, batch_executors):
     qids = (0, 21)
     vecs = {i: _qvec(spark, i) for i in qids}
     queries = [(f"q{i}", vecs[i]) for i in qids]
-    allow = _emb(spark).filter(F.col("vec_id") % 3 == 0).select("vec_id")
-    for kw in ({}, {"use_pq": True, "overquery": 50}):
+    allow_df = _emb(spark).filter(F.col("vec_id") % 3 == 0).select("vec_id")
+    # the DataFrame form always runs on Spark; the same ids as a list
+    # may run on the driver
+    allow_ids = [r.vec_id for r in allow_df.collect()]
+    cases = (
+        (allow, kw)
+        for _ in batch_executors()
+        for allow in (allow_df, allow_ids)
+        for kw in ({}, {"use_pq": True, "overquery": 50})
+    )
+    for allow, kw in cases:
         rows = ivf_query_batch(
             spark, ivf_dir, queries, k=5, n_probe=4, filter_ids=allow,
             filtered_exact_threshold=0, **kw
